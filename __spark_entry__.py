@@ -265,10 +265,9 @@ def _incremental_pagerank_sql(iters: int) -> str:
     """Oracle for pagerank_incremental: ``iters`` fixed PageRank
     iterations on the base graph produce the warm start, then ``iters``
     plain power-iteration steps on the perturbed graph (the deterministic
-    ``(src*31+dst)%23 <> 0`` edge drop). Warm-started delta propagation
-    at θ=0/tol=0 IS the plain power iteration from x_prev
-    (operators/pagerank.py:pagerank_delta initial_ranks path), so the
-    replay needs no delta bookkeeping."""
+    ``(src*31+dst)%23 <> 0`` edge drop) — pagerank_incremental is
+    pagerank() warm-started from x_prev, so each step is the plain
+    power iteration."""
     parts = [
         _EDGES_CTE, _NODES_CTE,
         "deg AS (SELECT src, count(*) AS outd FROM edges GROUP BY src)",
@@ -1167,13 +1166,6 @@ def _q_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.ranks.select("id", F.round("rank", 6).alias("rank"))
 
 
-def _q_pagerank_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir)
-    res = pagerank(_vertices(e), e, max_iterations=PR_ITERS, tol=0.0,
-                   strategy="csr")
-    return res.ranks.select("id", F.round("rank", 6).alias("rank"))
-
-
 def _q_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _edges(spark, sf_dir)
     res = pagerank(_vertices(e), e, max_iterations=PR_ITERS, tol=0.0)
@@ -1473,27 +1465,11 @@ def _q_triangle_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_stream(_edges(spark, sf_dir))
 
 
-def _q_pagerank_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-propagation PageRank (push-style). At θ=0 and a fixed
-    iteration count it is float-reorder-equal to the standard loop, so
-    it shares the same unrolled-SQL oracle (values round to 6 dp before
-    hashing)."""
-    from neo4j_graph_algorithms_spark.operators.pagerank import (
-        pagerank_delta,
-    )
-
-    e = _edges(spark, sf_dir)
-    res = pagerank_delta(_vertices(e), e, max_iterations=PR_ITERS, tol=0.0)
-    return res.ranks.select("id", F.round("rank", 6).alias("rank"))
-
-
 def _q_pagerank_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warm-started re-rank after a deterministic edge drop: PR_ITERS
     fixed iterations on the base graph give prev_ranks, then PR_ITERS
-    warm iterations on the perturbed graph via the standard warm-started
-    loop (pagerank_incremental's default strategy='dataframe';
-    _incremental_pagerank_sql replays both phases — at tol=0 the delta
-    strategy reaches the same iterates, but 'dataframe' is what runs)."""
+    warm iterations on the perturbed graph via the warm-started superstep
+    loop; _incremental_pagerank_sql replays both phases."""
     from neo4j_graph_algorithms_spark.operators.pagerank import (
         pagerank_incremental,
     )
@@ -6402,8 +6378,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hyperball_anf": _q_hyperball_anf,
         "effective_diameter": _q_effective_diameter,
         "pagerank_personalized": _q_pagerank_personalized,
-        "pagerank_csr": _q_pagerank_csr,
-        "pagerank_delta": _q_pagerank_delta,
         "pagerank_topk": _q_pagerank_topk,
         "pagerank_tolerance": _q_pagerank_tolerance,
         "pages_host_graph": _q_pages_host_graph,
@@ -6566,8 +6540,6 @@ def oracle_sql() -> dict[str, str]:
             WITH {_EDGES_CTE}, {_CANON_CTE}, {_TRI_CTE}
             SELECT a AS node_a, b AS node_b, c AS node_c FROM tri
         """,
-        "pagerank_csr": _pagerank_unrolled_sql(PR_ITERS, weighted=False),
-        "pagerank_delta": _pagerank_unrolled_sql(PR_ITERS, weighted=False),
         "pagerank_incremental": _incremental_pagerank_sql(PR_ITERS),
         "pagerank_tolerance": _pagerank_tolerance_unrolled_sql(
             100, 1e-6, block=4),

@@ -216,11 +216,6 @@ def run_bench() -> dict:
     steal["pagerank_conv"] = st
     edges_per_sec_per_superstep = n_edges * supersteps / t_pr
 
-    # NOTE: pagerank_delta is deliberately NOT benched here — measured
-    # slower than the standard loop on this graph (see its docstring);
-    # it exists for localized-frontier regimes (incremental re-rank,
-    # narrow personalization), not the full-graph headline.
-
     t, st, wres = _timed(lambda: connected_components(v, e), "wcc")
     queries["wcc"] = round(t, 3)
     steal["wcc"] = st

@@ -23,36 +23,27 @@ atomic-free shared-memory design. We sum float64 (needed for the 1e-6
 convergence target); reference goldens are asserted at their own 1e-2
 tolerance, the float64 oracle at 1e-6.
 
-Two physical strategies:
-
-- ``dataframe`` (default): per superstep one shuffle join
-  (edges ⋈ ranks on src — both sides pre-partitioned on the join key, so
-  only the rank side moves) + one hash aggregation on dst (map-side
-  partial combine ≡ the reference's per-partition score buffers +
-  transpose, PageRank.java:390-408). All JVM/codegen, zero Python in the
-  hot loop.
-- ``csr``: per-partition CSR blocks (sorted src offsets + packed dst
-  arrays in Arrow buffers) built ONCE, then each superstep runs a cogrouped
-  Arrow-vectorized gather-scatter SpMV in pandas/NumPy, followed by a
-  final dst-sum — the north-star layout. Ranks flow to blocks by the
-  same hash partitioning every round.
+One physical engine: per superstep one sort-merge join (edges ⋈ ranks
+on src — the edge side is pre-partitioned and pre-sorted on the join key
+once, so only the vertex-sized rank side moves) + one hash aggregation
+on dst (map-side partial combine ≡ the reference's per-partition score
+buffers + transpose, PageRank.java:390-408). All JVM/codegen, zero
+Python in the hot loop.
 """
 
 from __future__ import annotations
 
 import math
-import os
+import tempfile
 from dataclasses import dataclass, field
 from typing import Any, Iterable
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from neo4j_graph_algorithms_spark.plans.checkpoint import CheckpointManager
 from neo4j_graph_algorithms_spark.plans.loop_conf import superstep_conf
 
-__all__ = ["pagerank", "pagerank_delta", "pagerank_incremental",
+__all__ = ["pagerank", "pagerank_incremental",
            "pagerank_batch_personalized", "spam_mass", "PageRankResult"]
 
 
@@ -101,155 +92,6 @@ def _init_ranks(vertices: DataFrame, damping: float,
 
 
 # ---------------------------------------------------------------------------
-# CSR block strategy
-# ---------------------------------------------------------------------------
-
-_BLOCK_SCHEMA = (
-    "pid int, chunk int, src_ids array<long>, src_offsets array<int>, "
-    "dsts array<long>, factors array<double>"
-)
-
-
-def _build_csr_blocks(edge_factors: DataFrame, num_blocks: int,
-                      chunk_edges: int = 2_000_000) -> DataFrame:
-    """Pack each hash-block of edges into CSR rows (built once, persisted).
-
-    Layout per row: sorted unique ``src_ids`` + ``src_offsets`` (CSR
-    indptr) into packed ``dsts``/``factors`` arrays — the Arrow-buffer
-    adjacency the north-star mandates; ≡ the reference's AdjacencyMatrix
-    offsets+targets arrays (core/.../heavyweight/AdjacencyMatrix.java:47-118)
-    per partition instead of per JVM. Rows are chunked at ``chunk_edges``
-    so a 100 TB hub partition still yields bounded Arrow batches.
-    """
-    import numpy as np
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(pdf["pid"].iloc[0])
-        pdf = pdf.sort_values(["src", "dst"], kind="mergesort")
-        src = pdf["src"].to_numpy()
-        dst = pdf["dst"].to_numpy()
-        fac = pdf["factor"].to_numpy()
-        rows = []
-        for chunk_no, lo in enumerate(range(0, len(pdf), chunk_edges)):
-            hi = min(lo + chunk_edges, len(pdf))
-            s, d, f = src[lo:hi], dst[lo:hi], fac[lo:hi]
-            uniq, counts = np.unique(s, return_counts=True)
-            offsets = np.zeros(len(uniq) + 1, dtype=np.int32)
-            np.cumsum(counts, out=offsets[1:])
-            rows.append(
-                (pid, chunk_no, uniq.tolist(), offsets.tolist(), d.tolist(), f.tolist())
-            )
-        return pd.DataFrame(
-            rows,
-            columns=["pid", "chunk", "src_ids", "src_offsets", "dsts", "factors"],
-        )
-
-    keyed = edge_factors.withColumn(
-        "pid", F.pmod(F.hash("src"), F.lit(num_blocks)).cast("int")
-    )
-    return keyed.groupBy("pid").applyInPandas(pack, _BLOCK_SCHEMA)
-
-
-def _write_csr_artifact(edge_factors: DataFrame, num_blocks: int,
-                        artifact_dir: str | None = None) -> str:
-    """Pack blocks once and write them pid-partitioned to parquet.
-
-    The kernel side then ships ONLY the vertex-sized rank table through
-    Arrow per superstep; each Python worker reads its pid's packed
-    adjacency from the artifact and caches it process-wide (an earlier
-    cogroup design re-shipped the |E|-sized Arrow blocks JVM→Python
-    every superstep — measured 2.2 s/superstep vs 0.9 for the
-    DataFrame path at 13.5M edges; this removes exactly that transfer).
-    Unique per-run subdir: worker caches key by path, so path reuse for
-    a different graph would serve stale adjacency."""
-    import tempfile
-    import uuid
-
-    base = artifact_dir or tempfile.mkdtemp(prefix="pagerank_csr_")
-    root = os.path.join(base, f"run_{uuid.uuid4().hex}")
-    blocks = _build_csr_blocks(edge_factors, num_blocks)
-    blocks.write.partitionBy("pid").mode("overwrite").parquet(root)
-    return root
-
-
-# per-Python-worker cache: (path, pid) -> list of chunk tuples; small
-# LRU so a worker that serves many pids over time stays bounded
-_CSR_BLOCK_CACHE: "dict[tuple[str, int], list]" = {}
-_CSR_CACHE_CAP = 8
-
-
-def _load_csr_block(path: str, pid: int) -> list:
-    key = (path, pid)
-    hit = _CSR_BLOCK_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    try:
-        t = pq.read_table(os.path.join(path, f"pid={pid}"))
-    except FileNotFoundError:
-        chunks: list = []
-    else:
-        chunks = [
-            (
-                np.asarray(t.column("src_ids")[i].as_py(), dtype=np.int64),
-                np.asarray(t.column("src_offsets")[i].as_py(), dtype=np.int64),
-                np.asarray(t.column("dsts")[i].as_py(), dtype=np.int64),
-                np.asarray(t.column("factors")[i].as_py(), dtype=np.float64),
-            )
-            for i in range(t.num_rows)
-        ]
-    while len(_CSR_BLOCK_CACHE) >= _CSR_CACHE_CAP:
-        _CSR_BLOCK_CACHE.pop(next(iter(_CSR_BLOCK_CACHE)))
-    _CSR_BLOCK_CACHE[key] = chunks
-    return chunks
-
-
-def _csr_superstep(ranks: DataFrame, artifact_path: str,
-                   num_blocks: int) -> DataFrame:
-    """One gather-scatter SpMV over the CSR artifact → (dst, msg).
-
-    Ranks are hashed to the block that owns their src adjacency (one
-    shuffle of the vertex-sized rank table); the NumPy kernel loads its
-    pid's packed adjacency from the artifact (cached per worker),
-    gathers ranks by searchsorted over the sorted src ids, scatters
-    ``rank·factor`` along the packed dst arrays with an in-kernel
-    partial sum (pandas groupby ≡ map-side combine), and a final
-    dst-keyed hash agg combines across blocks.
-    """
-    import numpy as np
-
-    def spmv(key: tuple, ranks_pdf: pd.DataFrame) -> pd.DataFrame:
-        chunks = _load_csr_block(artifact_path, int(key[0]))
-        if not chunks or ranks_pdf.empty:
-            return pd.DataFrame({"dst": pd.Series(dtype="int64"),
-                                 "msg": pd.Series(dtype="float64")})
-        rid = ranks_pdf["id"].to_numpy()
-        rval = ranks_pdf["rank"].to_numpy()
-        order = np.argsort(rid, kind="mergesort")
-        rid, rval = rid[order], rval[order]
-        outs = []
-        for src_ids, offsets, dsts, factors in chunks:
-            pos = np.searchsorted(rid, src_ids)
-            pos = np.clip(pos, 0, len(rid) - 1)
-            src_rank = np.where(rid[pos] == src_ids, rval[pos], 0.0)
-            per_edge = np.repeat(src_rank, np.diff(offsets)) * factors
-            s = pd.Series(per_edge).groupby(dsts).sum()
-            outs.append(pd.DataFrame({"dst": s.index.to_numpy(),
-                                      "msg": s.to_numpy()}))
-        out = pd.concat(outs, ignore_index=True)
-        return out.groupby("dst", as_index=False)["msg"].sum()
-
-    ranks_keyed = ranks.withColumn(
-        "pid", F.pmod(F.hash("id"), F.lit(num_blocks)).cast("int")
-    ).select("pid", "id", "rank")
-    partial = ranks_keyed.groupBy("pid").applyInPandas(
-        spmv, "dst long, msg double")
-    return partial.groupBy("dst").agg(F.sum("msg").alias("msg"))
-
-
-# ---------------------------------------------------------------------------
 # Driver loop
 # ---------------------------------------------------------------------------
 
@@ -263,8 +105,6 @@ def pagerank(
     tol: float = 0.0,
     weighted: bool = False,
     source_ids: Iterable[int] | None = None,
-    strategy: str = "dataframe",
-    num_blocks: int | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 5,
     unroll: int = 4,
@@ -285,9 +125,9 @@ def pagerank(
     ``tol=0`` reproduces the reference's fixed-iteration semantics
     (PageRank.java:352-367); ``tol>0`` is the convergence extension.
 
-    ``hub_threshold``: power-law skew defense (dataframe strategy). Web
-    graphs are Zipfian — partitioning edges by ``src`` puts ALL of a hub
-    page's out-edges in one partition, so one task owns deg(hub) edges.
+    ``hub_threshold``: power-law skew defense. Web graphs are Zipfian —
+    partitioning edges by ``src`` puts ALL of a hub page's out-edges in
+    one partition, so one task owns deg(hub) edges.
     With a threshold set, sources whose out-degree exceeds it are split
     into ``hub_replicas`` sub-vertices (:func:`..plans.skew.split_high_degree`):
     the edge cache is partitioned by ``(src, replica)`` so a hub's edges
@@ -295,9 +135,7 @@ def pagerank(
     the (tiny) hot-vertex rank rows to every replica via a broadcast
     before the join. Message sums are unchanged up to float re-ordering;
     the reference's single-JVM equivalent is degree-balanced partition
-    sizing (impl/pagerank/PageRank.java:86-92,289-317). The ``csr``
-    strategy needs no flag — its blocks are already chunked at
-    ``chunk_edges`` regardless of source degree.
+    sizing (impl/pagerank/PageRank.java:86-92,289-317).
 
     ``edges_prelayout``: set when ``edges`` comes from a src-bucketed,
     src-sorted table (sources/bucketed.py) — the one-time storage layout
@@ -309,10 +147,10 @@ def pagerank(
     ``(src, replica)``).
 
     ``unroll``: number of supersteps fused into one lazy plan between
-    materializations (dataframe strategy only). Each materialization is
-    one Spark action, so unrolling divides the job-scheduling overhead
-    of the driver loop by J without changing results — the shuffles per
-    superstep are identical, they just pipeline inside one job. The
+    materializations. Each materialization is one Spark action, so
+    unrolling divides the job-scheduling overhead of the driver loop by
+    J without changing results — the shuffles per superstep are
+    identical, they just pipeline inside one job. The
     convergence check then sees the delta across the whole block:
     PageRank's update is a contraction (damping < 1 drives per-step
     deltas monotonically down in the limit), so block-delta < tol is a
@@ -332,20 +170,15 @@ def pagerank(
     tests pin. Redistribution references the evolving state twice per
     superstep, so ``unroll`` is clamped to 1 (each step materializes —
     without that an unrolled block would recompute the rank chain 2^J
-    times). Dataframe strategy only; personalized PR would redistribute
-    to its teleport set instead — rejected explicitly rather than
-    guessed.
+    times). Personalized PR would redistribute to its teleport set
+    instead — rejected explicitly rather than guessed.
     """
     spark = spark or vertices.sparkSession
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    num_blocks = num_blocks or shuffle_n
 
     if dangling not in ("drop", "redistribute"):
         raise ValueError("dangling must be 'drop' or 'redistribute'")
     if dangling == "redistribute":
-        if strategy != "dataframe":
-            raise NotImplementedError(
-                "dangling='redistribute' requires strategy='dataframe'")
         if source_ids is not None:
             raise NotImplementedError(
                 "dangling='redistribute' with personalized teleport sets "
@@ -354,74 +187,69 @@ def pagerank(
         unroll = 1  # state referenced twice per superstep; see docstring
 
     ef = _edge_factors(edges, weighted)
-    csr_path: str | None = None
     hot_replica_map: DataFrame | None = None
-    if strategy == "csr":
-        csr_path = _write_csr_artifact(ef, num_blocks)
-        plan_side = None
-    else:
-        # Pre-partition AND pre-sort the (large) edge side on the join
-        # key once: the per-superstep sort-merge join then streams the
-        # cached partitions with NO exchange and NO re-sort — without
-        # the sortWithinPartitions the SMJ re-sorts all |E| rows every
-        # superstep (measured: the dominant per-superstep CPU at 13.5M
-        # edges). Only the vertex-sized rank side moves per superstep.
-        if hub_threshold is not None:
-            from neo4j_graph_algorithms_spark.plans.skew import split_high_degree
+    # Pre-partition AND pre-sort the (large) edge side on the join key
+    # once: the per-superstep sort-merge join then streams the cached
+    # partitions with NO exchange and NO re-sort — without the
+    # sortWithinPartitions the SMJ re-sorts all |E| rows every superstep
+    # (measured: the dominant per-superstep CPU at 13.5M edges). Only
+    # the vertex-sized rank side moves per superstep.
+    if hub_threshold is not None:
+        from neo4j_graph_algorithms_spark.plans.skew import split_high_degree
 
-            ef = split_high_degree(ef, hub_threshold, hub_replicas)
-            plan_side = (
-                ef.repartition(num_blocks, "src", "replica")
-                .sortWithinPartitions("src", "replica")
-                .persist()
+        ef = split_high_degree(ef, hub_threshold, hub_replicas)
+        plan_side = (
+            ef.repartition(shuffle_n, "src", "replica")
+            .sortWithinPartitions("src", "replica")
+            .persist()
+        )
+        # hot sources × every replica id — vertex rows for hubs only,
+        # so this table is tiny and broadcast per superstep
+        hot_replica_map = (
+            ef.filter(F.col("replica") > 0)
+            .select(F.col("src").alias("id"))
+            .distinct()
+            .select(
+                "id",
+                F.explode(
+                    F.sequence(F.lit(0), F.lit(hub_replicas - 1))
+                ).alias("replica"),
             )
-            # hot sources × every replica id — vertex rows for hubs only,
-            # so this table is tiny and broadcast per superstep
-            hot_replica_map = (
-                ef.filter(F.col("replica") > 0)
-                .select(F.col("src").alias("id"))
-                .distinct()
-                .select(
-                    "id",
-                    F.explode(
-                        F.sequence(F.lit(0), F.lit(hub_replicas - 1))
-                    ).alias("replica"),
-                )
-                .persist()
-            )
-            hot_replica_map.count()
-        elif edges_prelayout:
-            # the source is already bucketed+sorted on src (sources/
-            # bucketed.py): its scan reports HashPartitioning(src), so
-            # degree-factor groupBy/join and the superstep SMJ all run
-            # exchange-free on this side — repartitioning here would
-            # re-shuffle |E| rows to throw that layout away. Two
-            # subtleties, both measured on the plan:
-            # (a) the planner drops bucketed reading when nothing in the
-            #     CACHE BUILD plan needs the distribution ("Bucketed:
-            #     false (disabled by query planner)") — the cache then
-            #     carries UnknownPartitioning and every superstep
-            #     re-shuffles it; pin autoBucketedScan off for the build;
-            # (b) the cached relation loses the bucket files' sort order
-            #     through AQE, so the SMJ would re-sort |E| rows per
-            #     superstep; sortWithinPartitions is NARROW (no shuffle)
-            #     and near-free on the already-ordered bucket data, and
-            #     restores the ordering knowledge at the cache boundary.
-            auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-            prev_auto = spark.conf.get(auto_key, "true")
-            spark.conf.set(auto_key, "false")
-            try:
-                plan_side = ef.sortWithinPartitions("src").persist()
-                plan_side.count()
-            finally:
-                spark.conf.set(auto_key, prev_auto)
-        else:
-            plan_side = (
-                ef.repartition(num_blocks, "src")
-                .sortWithinPartitions("src")
-                .persist()
-            )
-        plan_side.count()
+            .persist()
+        )
+        hot_replica_map.count()
+    elif edges_prelayout:
+        # the source is already bucketed+sorted on src (sources/
+        # bucketed.py): its scan reports HashPartitioning(src), so
+        # degree-factor groupBy/join and the superstep SMJ all run
+        # exchange-free on this side — repartitioning here would
+        # re-shuffle |E| rows to throw that layout away. Two
+        # subtleties, both measured on the plan:
+        # (a) the planner drops bucketed reading when nothing in the
+        #     CACHE BUILD plan needs the distribution ("Bucketed:
+        #     false (disabled by query planner)") — the cache then
+        #     carries UnknownPartitioning and every superstep
+        #     re-shuffles it; pin autoBucketedScan off for the build;
+        # (b) the cached relation loses the bucket files' sort order
+        #     through AQE, so the SMJ would re-sort |E| rows per
+        #     superstep; sortWithinPartitions is NARROW (no shuffle)
+        #     and near-free on the already-ordered bucket data, and
+        #     restores the ordering knowledge at the cache boundary.
+        auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+        prev_auto = spark.conf.get(auto_key, "true")
+        spark.conf.set(auto_key, "false")
+        try:
+            plan_side = ef.sortWithinPartitions("src").persist()
+            plan_side.count()
+        finally:
+            spark.conf.set(auto_key, prev_auto)
+    else:
+        plan_side = (
+            ef.repartition(shuffle_n, "src")
+            .sortWithinPartitions("src")
+            .persist()
+        )
+    plan_side.count()
 
     ckpt = CheckpointManager(
         spark, checkpoint_dir, checkpoint_interval, algorithm="pagerank"
@@ -437,7 +265,7 @@ def pagerank(
     # the per-superstep left join needs neither exchange nor sort on the
     # vertex side
     vbase = (
-        vbase.repartition(num_blocks, "id").sortWithinPartitions("id").persist()
+        vbase.repartition(shuffle_n, "id").sortWithinPartitions("id").persist()
     )
     n_vertices = vbase.count()
 
@@ -477,32 +305,28 @@ def pagerank(
 
     def _one_superstep(cur: DataFrame) -> DataFrame:
         """cur(id, rank) → next state, lazily; cur referenced once."""
-        if strategy == "csr":
-            msgs = _csr_superstep(cur.select("id", "rank"), csr_path,
-                                  num_blocks)
-        else:
-            rank_side = cur.select(F.col("id").alias("src"), "rank")
-            if hot_replica_map is not None:
-                # expand hub ranks to all replicas (cheap: hot set only);
-                # cold sources keep the single replica-0 row
-                rank_side = (
-                    rank_side.join(
-                        F.broadcast(
-                            hot_replica_map.withColumnRenamed("id", "src")
-                        ),
-                        "src",
-                        "left",
-                    )
-                    .withColumn("replica", F.coalesce("replica", F.lit(0)))
+        rank_side = cur.select(F.col("id").alias("src"), "rank")
+        if hot_replica_map is not None:
+            # expand hub ranks to all replicas (cheap: hot set only);
+            # cold sources keep the single replica-0 row
+            rank_side = (
+                rank_side.join(
+                    F.broadcast(
+                        hot_replica_map.withColumnRenamed("id", "src")
+                    ),
+                    "src",
+                    "left",
                 )
-                join_keys = ["src", "replica"]
-            else:
-                join_keys = ["src"]
-            msgs = (
-                plan_side.join(rank_side, join_keys)
-                .groupBy("dst")
-                .agg(F.sum(F.col("rank") * F.col("factor")).alias("msg"))
+                .withColumn("replica", F.coalesce("replica", F.lit(0)))
             )
+            join_keys = ["src", "replica"]
+        else:
+            join_keys = ["src"]
+        msgs = (
+            plan_side.join(rank_side, join_keys)
+            .groupBy("dst")
+            .agg(F.sum(F.col("rank") * F.col("factor")).alias("msg"))
+        )
         if dang is not None:
             # dangling mass S as an in-plan 1-row aggregate; the cross
             # join broadcasts it (scalar), costing no extra edge pass
@@ -558,8 +382,6 @@ def pagerank(
                 if max_delta < tol:
                     converged = True
 
-    # `ranks` is always materialized (initial eager localCheckpoint or
-    # ckpt.maybe_checkpoint) — lineage no longer reaches the artifact
     result = ranks.select("id", "rank")
     metrics = list(ckpt.metrics)
     vbase.unpersist()
@@ -567,293 +389,32 @@ def pagerank(
         dang.unpersist()
     if hot_replica_map is not None:
         hot_replica_map.unpersist()
-    if csr_path is not None:
-        import shutil
-
-        shutil.rmtree(os.path.dirname(csr_path), ignore_errors=True)
-    if plan_side is not None:
-        plan_side.unpersist()
-    return PageRankResult(result, it, converged, max_delta, metrics)
-
-
-# ---------------------------------------------------------------------------
-# Delta-propagation variant
-# ---------------------------------------------------------------------------
-
-
-def pagerank_delta(
-    vertices: DataFrame,
-    edges: DataFrame,
-    *,
-    damping: float = 0.85,
-    max_iterations: int = 100,
-    tol: float = 1e-6,
-    weighted: bool = False,
-    source_ids: Iterable[int] | None = None,
-    prune_threshold: float = 0.0,
-    unroll: int = 8,
-    broadcast_frontier_rows: int = 100_000,
-    num_blocks: int | None = None,
-    initial_ranks: DataFrame | None = None,
-    spark: SparkSession | None = None,
-) -> PageRankResult:
-    """PageRank via delta propagation — same fixed point as
-    :func:`pagerank`, propagating only rank *changes*.
-
-    The update ``x_{k+1} = base + d·A·x_k`` is affine, so the change
-    vector obeys the *linear* recurrence ``δ_{k+1} = d·A·δ_k`` with
-    ``δ_0 = base`` and ``x_K = base + Σ_{k=1..K} δ_k``. Each superstep
-    therefore propagates only the delta frontier instead of the full
-    rank vector — the push-style formulation of the reference's
-    tolerance extension (its fixed-iteration core is
-    PageRank.java:352-367; tolerance stop is the north-star extension,
-    also see delta-PageRank in GraphLab/PowerGraph literature).
-
-    Structural differences from :func:`pagerank` at ``tol > 0``:
-
-    - the per-superstep message join shrinks with the frontier; once it
-      drops under ``broadcast_frontier_rows`` the join becomes an
-      explicit broadcast-hash join — no exchange of either side, the
-      cached edge partitions are scanned map-side only;
-    - the vertex-sized accumulate join runs once per ``unroll`` block;
-    - the stop rule is the per-superstep criterion ``max|δ_K| < tol``
-      (checked at block boundaries) — the faithful reading of
-      "max|Δrank| per iteration", while the standard loop's block delta
-      ``max|x_{k+J} − x_k|`` is an upper bound that can only stop later
-      (measured: 72 vs 88 supersteps to 1e-6 on the synthetic web
-      graph).
-
-    **Measured honestly (100k-page / 1.35M-edge graph, local[32]):**
-    the standard loop wins on wall-clock — 96.6 s vs 186 s (θ=0) /
-    142 s (θ=1e-9), and 33 s vs 74 s for 10-source personalized — even
-    though delta stops 16 supersteps earlier. On a well-connected web
-    graph the frontier saturates to ~|V| within a few supersteps and
-    stays there at any θ small enough to respect ``tol``, so the
-    accumulate join plus the J-way per-block union materialization is
-    pure overhead. Delta pays off only when the frontier genuinely
-    localizes — incremental re-ranking after small edge-set changes
-    (seed ``frontier`` with the perturbed nodes), or personalization
-    over graphs whose reachable set from the sources is a small
-    fraction of |V|. Kept as an API variant for those regimes; the
-    standard loop is the benched default.
-
-    ``prune_threshold``: drop deltas with ``|δ| ≤ θ`` from *propagation*
-    (they are still added to the ranks). Dropped mass is never pushed,
-    so the result can undershoot the fixed point by at most
-    ``d/(1−d)·Σ|dropped|`` — with the default ``θ=0`` the result is
-    float-reorder-equal to :func:`pagerank` (verified at 1e-9 in
-    tests). Set ``θ ≈ tol/|V|`` for an aggressively shrinking frontier
-    with error well under ``tol``.
-
-    Dangling nodes push nothing (reference semantics — no dangling-mass
-    term), which keeps the recurrence exactly linear; weighted and
-    personalized variants inherit from ``_edge_factors``/``_init_ranks``
-    unchanged (personalized: ``δ_0 = base`` is nonzero only at sources).
-
-    ``initial_ranks`` (``(id, rank)``) warm-starts from a previous
-    solution — THE regime where delta propagation earns its keep:
-    re-ranking after a crawl delta. One full superstep computes the
-    residual ``r = base + d·Aᵀ·x_prev − x_prev`` (zero wherever the
-    graph and fixed point are unchanged), the loop then propagates only
-    ``r``'s geometric decay: a small edge delta keeps the frontier
-    localized and the per-superstep join broadcast-sized, instead of 80+
-    full-graph supersteps from cold. Warm start is exactly the plain
-    power iteration from ``x_prev`` (``x_{k+1} = base + d·Aᵀ·x_k``), so
-    at ``tol=0`` and fixed iterations it is SQL-replayable (the
-    ``pagerank_incremental`` driver oracle). Nodes absent from
-    ``initial_ranks`` (newly crawled) start at ``base``.
-    :func:`pagerank_incremental` is the discoverable alias.
-    """
-    spark = spark or vertices.sparkSession
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    num_blocks = num_blocks or shuffle_n
-
-    ef = _edge_factors(edges, weighted)
-    plan_side = (
-        ef.repartition(num_blocks, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    plan_side.count()
-
-    vbase = _init_ranks(vertices, damping, source_ids).select("id", "base")
-    vbase = (
-        vbase.repartition(num_blocks, "id").sortWithinPartitions("id").persist()
-    )
-    n_vertices = vbase.count()
-
-    max_delta = math.inf
-    converged = False
-    it = 0
-
-    def _push(cur: DataFrame, small: bool) -> DataFrame:
-        """δ → d·Aᵀ·δ as (id, delta); cur referenced exactly once."""
-        delta_side = cur.select(F.col("id").alias("src"), "delta")
-        if small:
-            delta_side = F.broadcast(delta_side)
-        return (
-            plan_side.join(delta_side, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg((F.lit(damping) * F.sum(F.col("delta") * F.col("factor")))
-                 .alias("delta"))
-        )
-
-    if initial_ranks is None:
-        ranks = vbase.select("id", F.col("base").alias("rank")) \
-            .localCheckpoint(eager=True)
-        frontier = ranks.select("id", F.col("rank").alias("delta"))
-        n_frontier = n_vertices
-    else:
-        # warm start: x_prev aligned to the vertex set (new nodes →
-        # base), one full superstep for the residual
-        # r = base + d·Aᵀ·x_prev − x_prev, then propagate r.
-        x_prev = (
-            vbase.join(
-                initial_ranks.select("id", F.col("rank").alias("_prev")),
-                "id", "left")
-            .select("id", "base",
-                    F.coalesce(F.col("_prev"), F.col("base")).alias("rank"))
-            .localCheckpoint(eager=True)
-        )
-        pushed = _push(x_prev.select("id", F.col("rank").alias("delta")),
-                       small=False)
-        resid = (
-            x_prev.join(pushed.withColumnRenamed("delta", "_msg"),
-                        "id", "left")
-            .select(
-                "id",
-                (F.col("base") + F.coalesce(F.col("_msg"), F.lit(0.0))
-                 - F.col("rank")).alias("delta"),
-                "rank",
-            )
-            .localCheckpoint(eager=True)
-        )
-        it = 1  # the residual push consumed one superstep
-        ranks = resid.select(
-            "id", (F.col("rank") + F.col("delta")).alias("rank")
-        ).localCheckpoint(eager=True)
-        stats0 = resid.agg(
-            F.max(F.abs(F.col("delta"))).alias("mx"),
-            F.sum(F.when(F.abs(F.col("delta")) > F.lit(prune_threshold), 1)
-                  .otherwise(0)).alias("live"),
-        ).first()
-        max_delta = float(stats0["mx"] or 0.0)
-        n_frontier = int(stats0["live"] or 0)
-        frontier = resid.filter(
-            F.abs(F.col("delta")) > F.lit(prune_threshold)
-        ).select("id", "delta")
-        if (0.0 < tol and max_delta < tol) or n_frontier == 0:
-            vbase.unpersist()
-            plan_side.unpersist()
-            return PageRankResult(ranks, it, tol > 0.0 or n_frontier == 0,
-                                  max_delta, [])
-
-    # Within an unroll block the frontier can grow by up to the max
-    # out-degree per push, so a broadcast decision taken once from the
-    # PREVIOUS count could force-broadcast a vertex-scale intermediate
-    # frontier J−1 pushes later. Bound each push independently:
-    # broadcast push j only while prev_count · max_out_deg^j (capped at
-    # |V|) stays under broadcast_frontier_rows.
-    max_out_deg = int(
-        plan_side.groupBy("src").count().agg(F.max("count")).first()[0] or 1
-    )
-
-    with superstep_conf(spark, n_vertices):
-        while it < max_iterations and not converged:
-            block = min(max(1, unroll), max_iterations - it)
-            steps = []
-            cur = frontier
-            frontier_bound = float(n_frontier)
-            for j in range(block):
-                small = 0 < frontier_bound <= broadcast_frontier_rows
-                cur = _push(cur, small)
-                frontier_bound = min(
-                    frontier_bound * max_out_deg, float(n_vertices)
-                )
-                steps.append(cur.withColumn("j", F.lit(j)))
-            # J supersteps fused in ONE job; each step's subtree is
-            # referenced once by the next step and once (flat) by the
-            # union — O(J²) plan nodes, not 2^J.
-            block_union = steps[0]
-            for s in steps[1:]:
-                block_union = block_union.unionByName(s)
-            block_union = block_union.localCheckpoint(eager=True)
-            it += block
-
-            last = block - 1
-            stats = block_union.agg(
-                F.max(F.when(F.col("j") == last, F.abs(F.col("delta")))
-                      ).alias("mx"),
-                F.sum(F.when((F.col("j") == last)
-                             & (F.abs(F.col("delta"))
-                                > F.lit(prune_threshold)), 1)
-                      .otherwise(0)).alias("live"),
-            ).first()
-            max_delta = float(stats["mx"] or 0.0)
-            n_frontier = int(stats["live"] or 0)
-
-            acc = block_union.groupBy("id").agg(
-                F.sum("delta").alias("_dsum"))
-            ranks = (
-                ranks.join(acc, "id", "left")
-                .select(
-                    "id",
-                    (F.col("rank") + F.coalesce(F.col("_dsum"), F.lit(0.0)))
-                    .alias("rank"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            frontier = block_union.filter(
-                (F.col("j") == last)
-                & (F.abs(F.col("delta")) > F.lit(prune_threshold))
-            ).select("id", "delta")
-            if max_delta < tol or n_frontier == 0:
-                converged = max_delta < tol or tol <= 0.0
-                break
-
-    vbase.unpersist()
     plan_side.unpersist()
-    return PageRankResult(ranks, it, converged, max_delta, [])
+    return PageRankResult(result, it, converged, max_delta, metrics)
 
 
 def pagerank_incremental(
     vertices: DataFrame,
     edges: DataFrame,
     prev_ranks: DataFrame,
-    *,
-    strategy: str = "dataframe",
     **kwargs: Any,
 ) -> PageRankResult:
     """Re-rank after a graph delta, warm-started from ``prev_ranks``
     (yesterday's converged ranks + today's edge table → today's ranks
-    without a cold full-graph run).
+    without a cold full-graph run): :func:`pagerank` with
+    ``initial_ranks=prev_ranks``, so convergence needs only the
+    supersteps that damp ``|x_prev − x'|``, not the cold-start mass.
 
-    ``strategy="dataframe"`` (default) runs the standard superstep loop
-    from the warm start — convergence needs only the supersteps that
-    damp ``|x_prev − x'|``, not the cold-start mass.
-    ``strategy="delta"`` additionally propagates only the residual
-    frontier (:func:`pagerank_delta` with ``initial_ranks``) and stops
-    on the tighter per-superstep ``max|δ| < tol`` rule — worthwhile
-    only when the affected set stays a small fraction of |V|; on
-    well-connected web graphs the frontier saturates and the default's
-    cheaper supersteps win.
-
-    Measured (100k-page graph, 50-edge delta, tol=1e-6): warm standard
-    loop 104 supersteps vs 112 cold — and a tighter (1e-8) prev did not
+    Measured (100k-page graph, 50-edge delta, tol=1e-6): warm start
+    104 supersteps vs 112 cold — and a tighter (1e-8) prev did not
     shrink it further. On this graph the bound is the *perturbation's
     own* geometric decay from its initial magnitude (each new edge
     injects ~rank(src)/outdeg(src) at its dst), which is only a few
     orders above tol — so supersteps saved ≈ the orders of magnitude
     between the cold-start error and the delta's, modest unless the
-    delta is tiny. The value of warm starting is therefore mostly in
-    `strategy="delta"`'s frontier shrinkage when the affected set is
-    small, not in superstep count.
+    delta is tiny.
     """
-    if strategy == "delta":
-        return pagerank_delta(vertices, edges, initial_ranks=prev_ranks,
-                              **kwargs)
-    return pagerank(vertices, edges, initial_ranks=prev_ranks,
-                    strategy=strategy, **kwargs)
+    return pagerank(vertices, edges, initial_ranks=prev_ranks, **kwargs)
 
 
 def pagerank_batch_personalized(
@@ -923,17 +484,12 @@ def pagerank_batch_personalized(
     # BigInts and planning grinds to a halt. The durable-parquet
     # round-trip every `interval` iterations resets the estimate to the
     # file's real size (exactly how the main loop's CheckpointManager
-    # stays flat at 88+ supersteps), and buys crash-resume for free.
-    import tempfile
-
-    ckpt = CheckpointManager(
-        spark,
-        checkpoint_dir=tempfile.mkdtemp(prefix="batchppr_ckpt_"),
-        interval=8,
-        algorithm="pagerank_batch",
-    )
+    # stays flat at 88+ supersteps).
     metrics: list[dict[str, Any]] = []
-    with superstep_conf(spark, n_vertices):
+    with tempfile.TemporaryDirectory(prefix="batchppr_ckpt_") as ckpt_dir, \
+            superstep_conf(spark, n_vertices):
+        ckpt = CheckpointManager(spark, checkpoint_dir=ckpt_dir, interval=8,
+                                 algorithm="pagerank_batch")
         for it in range(1, max_iterations + 1):
             msgs = (
                 plan_side.join(ranks.withColumnRenamed("id", "src"), "src")
@@ -970,6 +526,9 @@ def pagerank_batch_personalized(
             if tol > 0.0 and max_delta < tol:
                 converged = True
                 break
+        # after a durable-checkpoint iteration `ranks` is a lazy read of
+        # ckpt_dir: materialize it before the directory is removed
+        ranks = ranks.localCheckpoint(eager=True)
     plan_side.unpersist()
     base.unpersist()
     return PageRankResult(ranks, it, converged, max_delta, metrics)

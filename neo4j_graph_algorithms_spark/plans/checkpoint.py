@@ -1,11 +1,11 @@
-"""Checkpointed iteration state tables with per-partition lineage metrics.
+"""Checkpointed iteration state tables with per-iteration metrics.
 
 Iterative DataFrame algorithms grow their logical plan every superstep;
 without truncation the plan (and task deserialization cost) explodes.
 ``CheckpointManager`` snapshots the state DataFrame every ``interval``
 iterations — either cheaply in memory (``localCheckpoint``) or durably as
 parquet under ``checkpoint_dir`` — and records a metrics row per
-iteration (wall time, rows, convergence delta, per-partition row counts).
+iteration (wall time, convergence delta, caller-supplied counters).
 
 Durable mode makes runs crash-resumable: ``resume()`` returns the latest
 committed (iteration, state) so a restarted driver continues where the
@@ -25,7 +25,6 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 __all__ = ["CheckpointManager"]
 
@@ -37,13 +36,11 @@ class CheckpointManager:
         checkpoint_dir: str | None = None,
         interval: int = 5,
         algorithm: str = "generic",
-        collect_partition_metrics: bool = False,
     ) -> None:
         self.spark = spark
         self.dir = checkpoint_dir
         self.interval = max(1, interval)
         self.algorithm = algorithm
-        self.collect_partition_metrics = collect_partition_metrics
         self.metrics: list[dict[str, Any]] = []
         self._persisted: list[DataFrame] = []
         self._t0 = time.time()
@@ -55,21 +52,13 @@ class CheckpointManager:
     def _metrics_path(self) -> str:
         return os.path.join(self.dir, "metrics.jsonl") if self.dir else ""
 
-    def record(self, iteration: int, state: DataFrame | None = None,
-               **extra: Any) -> dict[str, Any]:
+    def record(self, iteration: int, **extra: Any) -> dict[str, Any]:
         row: dict[str, Any] = {
             "algorithm": self.algorithm,
             "iteration": iteration,
             "wall_s": round(time.time() - self._t0, 4),
             **extra,
         }
-        if state is not None and self.collect_partition_metrics:
-            per_part = (
-                state.groupBy(F.spark_partition_id().alias("pid"))
-                .count()
-                .collect()
-            )
-            row["partition_rows"] = {int(r["pid"]): int(r["count"]) for r in per_part}
         self.metrics.append(row)
         return row
 
@@ -123,7 +112,7 @@ class CheckpointManager:
             info = {}
             if ck is None or ck == "local":
                 state.count()  # materialize (parquet write already did)
-        row = self.record(iteration, state, **({"checkpoint": ck} if ck else {}),
+        row = self.record(iteration, **({"checkpoint": ck} if ck else {}),
                           **info, **extra)
         if ck and ck != "local":
             self._commit_metrics(row)

@@ -65,7 +65,6 @@ _REGISTRY: dict[str, str] = {
     "algo.graph.remove": f"{_P}.catalog:GraphCatalog",
     "algo.graph.info": f"{_P}.catalog:GraphCatalog",
     # engine extensions (no reference procedure — web-pipeline surface)
-    "ext.pageRank.delta": f"{_P}.operators.pagerank:pagerank_delta",
     "ext.pageRank.incremental": f"{_P}.operators.pagerank:pagerank_incremental",
     "ext.unionFind.incremental": f"{_P}.operators.wcc:connected_components_incremental",
     "ext.hostGraph": f"{_P}.operators.hostgraph:host_graph",

@@ -52,10 +52,6 @@ def _parse_args(argv: list[str]) -> argparse.Namespace:
                    help="convergence tolerance (0 = fixed iterations)")
     p.add_argument("--max-iters", type=int, default=20)
     p.add_argument("--unroll", type=int, default=8)
-    p.add_argument("--strategy", choices=("dataframe", "csr"),
-                   default="dataframe",
-                   help="superstep kernel: DataFrame SMJ plan or "
-                        "per-partition CSR SpMV (Arrow blocks)")
     p.add_argument("--shuffle-partitions", type=int, default=None)
     p.add_argument("--warmup-iters", type=int, default=0,
                    help="untimed prefix run (JIT + cache warm)")
@@ -112,12 +108,11 @@ def main(argv: list[str] | None = None) -> None:
 
     if args.warmup_iters:
         pagerank(v, e, max_iterations=args.warmup_iters, tol=0.0,
-                 unroll=args.unroll, strategy=args.strategy)
+                 unroll=args.unroll)
 
     t0 = time.time()
     res = pagerank(v, e, max_iterations=args.max_iters, tol=args.tol,
-                   unroll=args.unroll, strategy=args.strategy,
-                   checkpoint_dir=args.checkpoint_dir)
+                   unroll=args.unroll, checkpoint_dir=args.checkpoint_dir)
     dt = time.time() - t0
 
     if args.output:

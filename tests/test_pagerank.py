@@ -36,32 +36,30 @@ def _vertices(spark, names):
     return spark.createDataFrame([(i,) for i in range(len(names))], "id long")
 
 
-def _run(spark, names, edge_pairs, golden, strategy, **kw):
+def _run(spark, names, edge_pairs, golden, **kw):
     v = _vertices(spark, names)
     e = make_edges(spark, edge_pairs, names)
-    res = pagerank(v, e, max_iterations=40, strategy=strategy, **kw)
+    res = pagerank(v, e, max_iterations=40, **kw)
     got = {r["id"]: r["rank"] for r in res.ranks.collect()}
     for i, n in enumerate(names):
         assert got[i] == pytest.approx(golden[n], abs=1e-2), (n, got[i], golden[n])
     return res
 
 
-@pytest.mark.parametrize("strategy", ["dataframe", "csr"])
-def test_pr_label1_golden(spark, strategy):
-    _run(spark, LABEL1_NAMES, LABEL1_EDGES, LABEL1_GOLDEN, strategy)
+def test_pr_label1_golden(spark):
+    _run(spark, LABEL1_NAMES, LABEL1_EDGES, LABEL1_GOLDEN)
 
 
 def test_pr_wiki_golden_with_dangling(spark):
     # node a is dangling — pushes nothing (NonWeightedComputeStep.java:54)
-    _run(spark, WIKI_NAMES, WIKI_EDGES, WIKI_GOLDEN, "dataframe")
+    _run(spark, WIKI_NAMES, WIKI_EDGES, WIKI_GOLDEN)
 
 
-@pytest.mark.parametrize("strategy", ["dataframe", "csr"])
-def test_pr_tolerance_convergence_vs_oracle(spark, strategy):
+def test_pr_tolerance_convergence_vs_oracle(spark):
     names = WIKI_NAMES
     v = _vertices(spark, names)
     e = make_edges(spark, WIKI_EDGES, names)
-    res = pagerank(v, e, max_iterations=200, tol=1e-8, strategy=strategy)
+    res = pagerank(v, e, max_iterations=200, tol=1e-8)
     assert res.converged
     idx = {n: i for i, n in enumerate(names)}
     oracle = pagerank_oracle(
@@ -180,87 +178,9 @@ def test_pagerank_hub_split_weighted_and_tol(spark):
         assert a[i] == pytest.approx(b[i], abs=1e-9), i
 
 
-# ---------------------------------------------------------------------------
-# Delta-propagation variant (pagerank_delta)
-# ---------------------------------------------------------------------------
-
-from neo4j_graph_algorithms_spark.operators.pagerank import pagerank_delta
-
-
-def test_pr_delta_golden_fixtures(spark):
-    for names, pairs, golden in [
-        (LABEL1_NAMES, LABEL1_EDGES, LABEL1_GOLDEN),
-        (WIKI_NAMES, WIKI_EDGES, WIKI_GOLDEN),
-    ]:
-        v = _vertices(spark, names)
-        e = make_edges(spark, pairs, names)
-        res = pagerank_delta(v, e, max_iterations=40, tol=0.0)
-        got = {r["id"]: r["rank"] for r in res.ranks.collect()}
-        for i, n in enumerate(names):
-            assert got[i] == pytest.approx(golden[n], abs=1e-2)
-
-
-@pytest.mark.parametrize("kw", [
-    dict(),
-    dict(weighted=True),
-    dict(source_ids=(1, 4)),
-])
-def test_pr_delta_exact_equals_standard(spark, kw):
-    """θ=0 delta propagation is float-reorder-equal to the standard loop
-    at the same fixed iteration count (the affine recurrence identity
-    x_K = base + Σ δ_k with δ_{k+1} = d·Aᵀ·δ_k)."""
-    names = WIKI_NAMES
-    v = _vertices(spark, names)
-    e = make_edges(spark, WIKI_EDGES, names)
-    a = pagerank(v, e, max_iterations=15, tol=0.0, **kw)
-    b = pagerank_delta(v, e, max_iterations=15, tol=0.0, **kw)
-    ga = {r["id"]: r["rank"] for r in a.ranks.collect()}
-    gb = {r["id"]: r["rank"] for r in b.ranks.collect()}
-    assert set(ga) == set(gb)
-    for i in ga:
-        assert gb[i] == pytest.approx(ga[i], abs=1e-9)
-
-
-def test_pr_delta_tolerance_converges_to_fixed_point(spark):
-    names = WIKI_NAMES
-    idx = {n: i for i, n in enumerate(names)}
-    v = _vertices(spark, names)
-    e = make_edges(spark, WIKI_EDGES, names)
-    res = pagerank_delta(v, e, max_iterations=200, tol=1e-8)
-    assert res.converged
-    oracle = pagerank_oracle(
-        len(names), [(idx[s], idx[d]) for s, d in WIKI_EDGES],
-        iterations=500, tol=1e-12,
-    )
-    got = {r["id"]: r["rank"] for r in res.ranks.collect()}
-    for i in range(len(names)):
-        assert got[i] == pytest.approx(oracle[i], abs=1e-6)
-
-
-def test_pr_delta_prune_error_bound(spark):
-    """θ>0 drops pushed mass; undershoot is bounded by d/(1-d)·Σ|dropped|
-    — here just assert the result stays within a loose band of the
-    exact fixed point while the frontier shrinks."""
-    names = WIKI_NAMES
-    idx = {n: i for i, n in enumerate(names)}
-    v = _vertices(spark, names)
-    e = make_edges(spark, WIKI_EDGES, names)
-    res = pagerank_delta(v, e, max_iterations=100, tol=1e-7,
-                         prune_threshold=1e-6)
-    oracle = pagerank_oracle(
-        len(names), [(idx[s], idx[d]) for s, d in WIKI_EDGES],
-        iterations=500, tol=1e-12,
-    )
-    got = {r["id"]: r["rank"] for r in res.ranks.collect()}
-    for i in range(len(names)):
-        assert got[i] == pytest.approx(oracle[i], abs=1e-4)
-
-
-@pytest.mark.parametrize("inc_strategy", ["dataframe", "delta"])
-def test_pr_incremental_matches_full_recompute(spark, inc_strategy):
+def test_pr_incremental_matches_full_recompute(spark):
     """Warm-started re-rank after an edge delta converges to the
-    perturbed graph's fixed point (residual propagation —
-    pagerank_delta initial_ranks path)."""
+    perturbed graph's fixed point."""
     from neo4j_graph_algorithms_spark.operators.pagerank import (
         pagerank_incremental,
     )
@@ -274,7 +194,7 @@ def test_pr_incremental_matches_full_recompute(spark, inc_strategy):
     new_pairs = [p for p in WIKI_EDGES if p != ("e", "b")] + [
         ("a", "k"), ("c", "d")]
     e1 = make_edges(spark, new_pairs, names)
-    inc = pagerank_incremental(v, e1, prev.ranks, strategy=inc_strategy,
+    inc = pagerank_incremental(v, e1, prev.ranks,
                                max_iterations=200, tol=1e-9)
     full = pagerank(v, e1, max_iterations=200, tol=1e-9)
     gi = {r["id"]: r["rank"] for r in inc.ranks.collect()}
@@ -293,17 +213,13 @@ def test_pr_incremental_unchanged_graph_stops_immediately(spark):
     v = _vertices(spark, WIKI_NAMES)
     e = make_edges(spark, WIKI_EDGES, WIKI_NAMES)
     prev = pagerank(v, e, max_iterations=300, tol=1e-10)
-    # delta path: residual of a converged solution is below tol after
-    # the single residual superstep
-    inc = pagerank_incremental(v, e, prev.ranks, strategy="delta",
-                               max_iterations=300, tol=1e-8)
-    assert inc.iterations == 1 and inc.converged
-    # standard warm-start path: stops at the first block boundary
+    # warm start from a converged solution stops at the first block
+    # boundary
     inc_std = pagerank_incremental(v, e, prev.ranks,
                                    max_iterations=300, tol=1e-8)
     assert inc_std.converged and inc_std.iterations <= 4
     gp = {r["id"]: r["rank"] for r in prev.ranks.collect()}
-    gi = {r["id"]: r["rank"] for r in inc.ranks.collect()}
+    gi = {r["id"]: r["rank"] for r in inc_std.ranks.collect()}
     for i in gp:
         assert gi[i] == pytest.approx(gp[i], abs=1e-8)
 
@@ -358,6 +274,32 @@ def test_batch_personalized_matches_single_runs(spark):
         for i in range(n):
             assert wide[i][s] == got[i], f"set {s} node {i}"
     assert batch.iterations == 8
+
+
+@pytest.mark.parametrize("iters", [8, 9])
+def test_batch_personalized_removes_checkpoint_dir(spark, tmp_path,
+                                                  monkeypatch, iters):
+    # the loop writes a durable snapshot every 8 iterations: at 8 the
+    # final ranks ARE that snapshot, at 9 they are one step past it
+    import tempfile
+
+    from neo4j_graph_algorithms_spark.operators.pagerank import (
+        pagerank_batch_personalized,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    n = 30
+    edges = [(i, (i * 7 + 3) % n) for i in range(n)]
+    e = spark.createDataFrame(edges, "src long, dst long")
+    v = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    batch = pagerank_batch_personalized(v, e, [[0], None],
+                                        max_iterations=iters, tol=0.0)
+    assert not list(tmp_path.glob("batchppr_ckpt_*"))
+    wide = {r["id"]: (r["r0"], r["r1"]) for r in batch.ranks.collect()}
+    for s, ss in enumerate([[0], None]):
+        single = pagerank(v, e, max_iterations=iters, tol=0.0, source_ids=ss)
+        for r in single.ranks.collect():
+            assert wide[r["id"]][s] == r["rank"], (s, r["id"])
 
 
 def test_batch_personalized_tolerance_and_validation(spark):
@@ -458,8 +400,6 @@ def test_pr_dangling_validation(spark):
     e = make_edges(spark, LABEL1_EDGES, LABEL1_NAMES)
     with pytest.raises(ValueError):
         pagerank(v, e, dangling="bogus")
-    with pytest.raises(NotImplementedError):
-        pagerank(v, e, dangling="redistribute", strategy="csr")
     with pytest.raises(NotImplementedError):
         pagerank(v, e, dangling="redistribute", source_ids=[0])
 
